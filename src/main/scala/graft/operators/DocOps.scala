@@ -47,8 +47,13 @@ object DocOps {
     * (source rows without results pass through unchanged). */
   def writeback(components: DataFrame, results: DataFrame, key: String,
       statusCol: String): DataFrame =
-    components.join(results, Seq(key), "left")
-      .withColumn("show",
+    dispatch(components.join(results, Seq(key), "left"), statusCol)
+
+  /** Status dispatch (F3, `bin/main.py:490-532`) on rows that already carry
+    * their fetch status: `show` is "new" for 200, "none" for 401/404 and
+    * null otherwise; `updated` is true iff a status is present. */
+  def dispatch(df: DataFrame, statusCol: String): DataFrame =
+    df.withColumn("show",
         when(col(statusCol).isin(401, 404), lit("none"))
           .when(col(statusCol) === 200, lit("new"))
           .otherwise(lit(null: String)))

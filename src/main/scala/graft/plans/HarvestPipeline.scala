@@ -13,10 +13,11 @@ import graft.sources.{EadXml, HttpOps}
   *   candidates (F1) → fetch (S5, adapter) → status dispatch (F3) →
   *   page fan-out + renumber (W1/F19) → orientation vote
   *   (A4/A5/T1/T2, adapters) → grouped document (A1/J4) →
-  *   METS render (S15) → writeback join (J2) — with a Parquet checkpoint
-  *   at every boundary via [[Pipeline.run]], so a stopped run resumes at
-  *   the first incomplete stage exactly like the reference's
-  *   serialize/slurp loop (`bin/main.py:655-708`).
+  *   METS render (S15), one aggregation → writeback status dispatch
+  *   (J2/F3) — with a Parquet checkpoint at every boundary via
+  *   [[Pipeline.run]], so a stopped run resumes at the first incomplete
+  *   stage exactly like the reference's serialize/slurp loop
+  *   (`bin/main.py:655-708`).
   *
   * Input: components(id, href, show, role, title). Output: one row per
   * component with harvest status, page count, rendered METS, and the
@@ -70,23 +71,23 @@ object HarvestPipeline {
       }),
 
       Pipeline.Stage("group_doc", { df =>
-        val members = df.filter(col("page").isNotNull)
-          .select(col("id"), col("page").as("seq"), col("page_name"),
-            col("checksum"), col("size"))
-        val docs = DocOps.groupToDoc(members, "id", Seq("page_name", "checksum", "size"),
-          Seq("seq"))
-        val mets = DocOps.renderXml(docs, "id", "mets",
-          """concat('<file seq="', m.seq, '" name="', m.page_name, '"/>')""")
-        df.groupBy("id", "href", "status").agg(max(col("n_pages")).as("n_pages"))
-          .join(mets.select(col("id"), col("xml").as("mets")), Seq("id"), "left")
+        // one aggregation per component: the page count and the sorted
+        // page members (null pages drop out of collect_list), so the
+        // METS renders in the same pass; no members → no METS
+        val member = struct(col("page").as("seq"), col("page_name"),
+          col("checksum"), col("size"))
+        val docs = df.groupBy("id", "href", "status").agg(
+          max(col("n_pages")).as("n_pages"),
+          sort_array(collect_list(when(col("page").isNotNull, member))).as("members"))
+        DocOps.renderXml(docs, "id", "mets",
+            """concat('<file seq="', m.seq, '" name="', m.page_name, '"/>')""")
+          .withColumn("mets", when(size(col("members")) > 0, col("xml")))
+          .drop("members", "xml")
       }),
 
-      Pipeline.Stage("writeback", { df =>
-        DocOps.writeback(
-          df.select(col("id"), col("href")),
-          df.select(col("id"), col("status"), col("n_pages"), col("mets")),
-          "id", "status")
-      }))
+      // group_doc leaves one row per component, so the writeback is the
+      // status dispatch alone
+      Pipeline.Stage("writeback", df => DocOps.dispatch(df, "status")))
 
     Pipeline.run(spark, components, checkpointRoot, stages)
   }

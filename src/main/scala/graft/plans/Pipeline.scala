@@ -1,9 +1,17 @@
 package graft.plans
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
+
+import scala.util.Try
+
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Staged, checkpointed, idempotent pipeline runner — the reference's
   * execution model (SURVEY §3.1): each stage reads the previous stage's
@@ -16,15 +24,39 @@ import org.apache.spark.sql.functions._
   *     instead of `%%`-delimited text — at 100 TB a checkpoint is a
   *     first-class distributed table;
   *   - idempotence is declarative: a stage is SKIPPED when its checkpoint
-  *     already exists (`_SUCCESS` marker), the F7 "skip work whose output
-  *     exists" contract (`bin/main.py:184,232-234,282,368`) lifted from
-  *     per-file checks to per-stage commit markers;
+  *     is committed AND current, the F7 "skip work whose output exists"
+  *     contract (`bin/main.py:184,232-234,282,368`) lifted from per-file
+  *     checks to per-stage commit markers;
   *   - within a stage, per-row idempotence is an anti-join against the
   *     sink listing ([[Incremental.notYetDone]]).
+  *
+  * Skip rule. A committed stage directory holds Spark's `_SUCCESS` and a
+  * `_RUN` token written after it: a fresh UUID for this commit plus the
+  * token of the upstream stage it was computed from. Stage 0 is current
+  * when both files exist; stage i > 0 is current when, in addition, its
+  * recorded upstream token equals stage i−1's token in this run. So a
+  * recomputed stage invalidates every stage below it, and a checkpoint
+  * without a token (a crash between the commit and the token write, or
+  * one written before tokens existed) counts as stale and is recomputed.
+  * Both files start with `_`, which Spark's file listing skips.
+  *
+  * Checkpoint reads ([[read]]) take the schema from the footer of one
+  * part file on the driver instead of letting Spark infer it, which
+  * costs a one-task job per read. The result has exactly the schema
+  * Spark's inference would give (all fields nullable, as every
+  * file-source read); a directory without a part file or without Spark's
+  * row metadata falls back to plain inference.
   */
 object Pipeline {
 
   final case class Stage(name: String, transform: DataFrame => DataFrame)
+
+  /** Footer key under which Spark's parquet writer stores the row schema
+    * as JSON (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Name of the per-stage run token file (see the skip rule above). */
+  val RunToken = "_RUN"
 
   /** True iff a committed checkpoint exists (directory with _SUCCESS). */
   def checkpointExists(spark: SparkSession, dir: String): Boolean = {
@@ -32,19 +64,76 @@ object Pipeline {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Read a checkpoint directory with its schema taken from a part-file
+    * footer, so no schema-inference job runs. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    footerSchema(spark, dir) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+
+  /** The Spark row schema stored in the footer of one part file of `dir`;
+    * None when there is no part file, no row metadata, or it does not
+    * parse. */
+  private[graft] def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    val part = if (!fs.exists(path)) None else fs.listStatus(path).iterator
+      .map(_.getPath)
+      .find { p => val n = p.getName
+        !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet") }
+    part.flatMap { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey)
+        finally reader.close()
+      Option(json).flatMap(j => Try(DataType.fromJson(j)).toOption).collect {
+        case s: StructType => s
+      }
+    }
+  }
+
+  /** The `_RUN` token of a committed checkpoint: (own, upstream). None
+    * when the checkpoint is uncommitted or has no token. */
+  private def runToken(spark: SparkSession, dir: String): Option[(String, String)] = {
+    val p = new Path(dir, RunToken)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!checkpointExists(spark, dir) || !fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val lines = try new String(in.readAllBytes(), UTF_8).split("\n", -1)
+        finally in.close()
+      if (lines.length >= 2) Some((lines(0), lines(1))) else None
+    }
+  }
+
+  /** Write a fresh `_RUN` token recording `upstream`; returns the token. */
+  private def writeRunToken(spark: SparkSession, dir: String, upstream: String): String = {
+    val token = UUID.randomUUID().toString
+    val p = new Path(dir, RunToken)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(s"$token\n$upstream".getBytes(UTF_8)) finally out.close()
+    token
+  }
+
   /** Run `stages` sequentially from `input`, checkpointing each stage at
-    * `<root>/<idx>_<name>`. Completed stages are not re-executed on
-    * re-run; execution resumes from the first missing checkpoint.
+    * `<root>/<idx>_<name>`. Current stages (see the skip rule above) are
+    * not re-executed; every stage below a recomputed one is. Checkpoints
+    * are read with [[read]], and only when a later stage needs one.
     * Returns the final stage's checkpoint as a DataFrame. */
   def run(spark: SparkSession, input: DataFrame, root: String,
       stages: Seq[Stage]): DataFrame = {
-    var current = input
+    var upstream = ""
+    var last: Option[String] = None
+    def current: DataFrame = last.fold(input)(read(spark, _))
     stages.zipWithIndex.foreach { case (stage, i) =>
       val dir = f"$root/$i%02d_${stage.name}"
-      if (!checkpointExists(spark, dir)) {
-        stage.transform(current).write.mode("overwrite").parquet(dir)
-      }
-      current = spark.read.parquet(dir)
+      upstream = runToken(spark, dir).collect { case (own, up) if up == upstream => own }
+        .getOrElse {
+          stage.transform(current).write.mode("overwrite").parquet(dir)
+          writeRunToken(spark, dir, upstream)
+        }
+      last = Some(dir)
     }
     current
   }

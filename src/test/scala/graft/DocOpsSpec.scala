@@ -50,6 +50,21 @@ class DocOpsSpec extends SparkSpec {
       ("u4", None, false)))
   }
 
+  test("dispatch maps each status to show and updated, null included (F3)") {
+    val rows = Seq(Some(200), Some(401), Some(404), Some(500), Some(599), None)
+      .zipWithIndex.map { case (st, i) => (i, st) }.toDF("i", "status")
+    val got = DocOps.dispatch(rows, "status").orderBy("i")
+      .select("show", "updated")
+      .collect().map(r => (Option(r.getString(0)), r.getBoolean(1)))
+    assert(got.toSeq === Seq(
+      (Some("new"), true),
+      (Some("none"), true),
+      (Some("none"), true),
+      (None, true),
+      (None, true),
+      (None, false)))
+  }
+
   test("orientation vote: bottom-k by cheap score then argmin costly (T1/T2)") {
     val candidates = Seq(
       // (image, rotation, word_count, misspelled)

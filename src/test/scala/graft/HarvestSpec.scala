@@ -2,8 +2,24 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.DocOps
 import graft.plans.HarvestPipeline
 import graft.sources.{EadXml, HttpOps}
+
+/** Per-URL statuses and body sizes for the group_doc/writeback
+  * differential: the page count is size % 4 + 1, so 7 bytes give four
+  * pages, 5 give two, 4 give one; a 200 without a body gives none. */
+private object MixFetcher extends HttpOps.HttpFetcher {
+  def fetch(url: String): (Int, Array[Byte]) = url.split('/').last match {
+    case "four.pdf" => (200, Array.fill(7)('a'.toByte))
+    case "two.pdf" => (200, Array.fill(5)('b'.toByte))
+    case "one.pdf" => (200, Array.fill(4)('c'.toByte))
+    case "nobody.pdf" => (200, null)
+    case "gone.pdf" => (404, null)
+    case "locked.pdf" => (401, null)
+    case _ => (500, null)
+  }
+}
 
 class HarvestSpec extends SparkSpec {
   import spark.implicits._
@@ -225,6 +241,61 @@ class HarvestSpec extends SparkSpec {
       assert(byId("r001")._1 === 200 && byId("r001")._2 === "new")
       assert(byId("r002")._1 === 401 && byId("r002")._2 === "none")
       assert(byId("r003")._1 === 404 && byId("r003")._2 === "none")
+    }
+  }
+
+  test("a cold harvest launches at most 11 jobs and a no-op re-run none") {
+    val root = tmpDir("harvest_jobs")
+    val cold = countJobs(HarvestPipeline.run(spark, components, root))
+    assert(cold <= 11, s"cold run launched $cold jobs")
+    assert(countJobs(HarvestPipeline.run(spark, components, root)) === 0)
+  }
+
+  test("every harvest checkpoint reads back with its inferred schema") {
+    val root = tmpDir("harvest_schema")
+    HarvestPipeline.run(spark, components, root)
+    assert(assertCheckpointSchemas(root) === Seq("00_candidates", "01_fetch",
+      "02_pages", "03_orient", "04_group_doc", "05_writeback"))
+  }
+
+  test("one-pass group_doc and join-free writeback equal the two-aggregation formula") {
+    val comps = Seq("four", "two", "one", "nobody", "gone", "locked", "broken")
+      .zipWithIndex.map { case (name, i) =>
+        (f"d$i%02d", s"http://x/docs/$name.pdf", null: String, null: String, name) }
+      .toDF("id", "href", "show", "role", "title")
+    val root = tmpDir("harvest_diff")
+    val out = HarvestPipeline.run(spark, comps, root, fetcher = MixFetcher)
+
+    // the formula the two stages replace, on the same orient checkpoint:
+    // page members grouped by id, the per-component row grouped apart,
+    // joined, then the writeback self-join on id
+    val orient = spark.read.parquet(s"$root/03_orient")
+    val members = orient.filter(col("page").isNotNull)
+      .select(col("id"), col("page").as("seq"), col("page_name"),
+        col("checksum"), col("size"))
+    val docs = DocOps.groupToDoc(members, "id", Seq("page_name", "checksum", "size"),
+      Seq("seq"))
+    val mets = DocOps.renderXml(docs, "id", "mets",
+      """concat('<file seq="', m.seq, '" name="', m.page_name, '"/>')""")
+    val grouped = orient.groupBy("id", "href", "status").agg(max(col("n_pages")).as("n_pages"))
+      .join(mets.select(col("id"), col("xml").as("mets")), Seq("id"), "left")
+    val old = DocOps.writeback(grouped.select(col("id"), col("href")),
+      grouped.select(col("id"), col("status"), col("n_pages"), col("mets")),
+      "id", "status")
+
+    assert(out.columns.toSeq === old.columns.toSeq)
+    val got = out.orderBy("id").collect().toSeq
+    assert(got === old.orderBy("id").collect().toSeq)
+    // the fixture covers what the fused stages must get right
+    val byName = got.map(r =>
+      r.getAs[String]("href").split('/').last.stripSuffix(".pdf") -> r).toMap
+    assert(byName("four").getAs[Long]("n_pages") === 4L)
+    assert(byName("four").getAs[String]("mets").split("<file ").length === 5)
+    assert(byName("nobody").isNullAt(byName("nobody").fieldIndex("mets")))
+    Seq("gone" -> "none", "locked" -> "none", "broken" -> null).foreach { case (t, show) =>
+      assert(byName(t).getAs[Long]("n_pages") === 0L)
+      assert(byName(t).isNullAt(byName(t).fieldIndex("mets")))
+      assert(byName(t).getAs[String]("show") === show)
     }
   }
 }

@@ -9,14 +9,19 @@ import graft.plans.{Incremental, Pipeline, TwoPhaseSink}
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
+  private def countingStages(executions: AtomicInteger) = Seq(
+    Pipeline.Stage("double", df => { executions.incrementAndGet()
+      df.withColumn("x", col("x") * 2) }),
+    Pipeline.Stage("inc", df => { executions.incrementAndGet()
+      df.withColumn("x", col("x") + 1) }))
+
+  private def deleteTree(path: String): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+
   test("staged run checkpoints every stage and resumes without re-executing") {
     val root = tmpDir("pipe")
     val executions = new AtomicInteger(0)
-    val stages = Seq(
-      Pipeline.Stage("double", df => { executions.incrementAndGet()
-        df.withColumn("x", col("x") * 2) }),
-      Pipeline.Stage("inc", df => { executions.incrementAndGet()
-        df.withColumn("x", col("x") + 1) }))
+    val stages = countingStages(executions)
     val in = Seq(1, 2, 3).toDF("x")
 
     val out1 = Pipeline.run(spark, in, root, stages)
@@ -27,6 +32,79 @@ class PipelineSpec extends SparkSpec {
     val out2 = Pipeline.run(spark, in, root, stages)
     assert(out2.orderBy("x").as[Int].collect().toSeq === Seq(3, 5, 7))
     assert(executions.get() === 2)
+  }
+
+  test("a recomputed stage re-executes every stage below it") {
+    val root = tmpDir("pipe_stale")
+    val executions = new AtomicInteger(0)
+    val stages = countingStages(executions)
+    val in = Seq(1, 2, 3).toDF("x")
+    Pipeline.run(spark, in, root, stages)
+    assert(executions.get() === 2)
+
+    // stage 0's checkpoint is lost: recomputing it makes stage 1's
+    // checkpoint stale even though its _SUCCESS is still there
+    deleteTree(s"$root/00_double")
+    val out = Pipeline.run(spark, in, root, stages)
+    assert(executions.get() === 4)
+    assert(out.orderBy("x").as[Int].collect().toSeq === Seq(3, 5, 7))
+
+    // and the freshly written tokens make the next run a no-op again
+    Pipeline.run(spark, in, root, stages)
+    assert(executions.get() === 4)
+  }
+
+  test("a checkpoint without its run token counts as stale") {
+    val root = tmpDir("pipe_token")
+    val executions = new AtomicInteger(0)
+    val stages = countingStages(executions)
+    val in = Seq(1, 2, 3).toDF("x")
+    Pipeline.run(spark, in, root, stages)
+    // a crash between stage 1's commit and its token write: stage 1 only
+    assert(new java.io.File(s"$root/01_inc/${Pipeline.RunToken}").delete())
+    Pipeline.run(spark, in, root, stages)
+    assert(executions.get() === 3)
+    // the same at stage 0: both stages re-execute
+    assert(new java.io.File(s"$root/00_double/${Pipeline.RunToken}").delete())
+    val out = Pipeline.run(spark, in, root, stages)
+    assert(executions.get() === 5)
+    assert(out.orderBy("x").as[Int].collect().toSeq === Seq(3, 5, 7))
+  }
+
+  test("Pipeline.read keeps the schema of a stage that outputs zero rows") {
+    val root = tmpDir("pipe_empty")
+    val in = Seq((1, "a"), (2, "b")).toDF("x", "s")
+      .withColumn("tags", array(col("s")))
+      .withColumn("m", struct(col("x").as("k"), lit(null: String).as("v")))
+    val out = Pipeline.run(spark, in, root, Seq(
+      Pipeline.Stage("none", df => df.filter(lit(false)))))
+    assert(out.count() === 0L)
+    assert(assertCheckpointSchemas(root) === Seq("00_none"))
+    assert(out.schema === spark.read.parquet(s"$root/00_none").schema)
+  }
+
+  test("Pipeline.read falls back to inference without Spark's row metadata") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // a parquet file from a non-Spark writer: no row-metadata footer key
+    val dir = tmpDir("plain_parquet")
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int32 x; optional binary s (UTF8); }")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/part-00000.parquet"))
+      .withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    try Seq(1 -> "a", 2 -> "b").foreach { case (x, s) =>
+      writer.write(rows.newGroup().append("x", x).append("s", s)) }
+    finally writer.close()
+
+    assert(Pipeline.footerSchema(spark, dir).isEmpty)
+    val got = Pipeline.read(spark, dir)
+    assert(got.schema === spark.read.parquet(dir).schema)
+    assert(got.orderBy("x").as[(Int, String)].collect().toSeq === Seq(1 -> "a", 2 -> "b"))
+    // a directory with no part file at all has no footer to read either
+    assert(Pipeline.footerSchema(spark, tmpDir("no_parts")).isEmpty)
   }
 
   test("notYetDone anti-join filters already-committed work") {

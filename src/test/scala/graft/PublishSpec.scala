@@ -52,6 +52,13 @@ class PublishSpec extends SparkSpec {
     assert(again.map(_.toString).toSeq === out.map(_.toString).toSeq)
   }
 
+  test("every publish checkpoint reads back with its inferred schema") {
+    val root = tmpDir("publish_schema")
+    PublishPipeline.run(spark, components, existing, titles, pages, root)
+    assert(assertCheckpointSchemas(root) === Seq("00_candidates", "01_pending",
+      "02_titled", "03_mets", "04_dao_insert"))
+  }
+
   test("publish last mile: page assembly + surgical EAD writeback compose") {
     import graft.operators.MultimodalOps
     import graft.sources.EadXml

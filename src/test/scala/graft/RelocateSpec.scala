@@ -11,25 +11,29 @@ class RelocateSpec extends SparkSpec {
 
   private val url = JdbcWorkQueue.derbyMemUrl("graft_relocate")
 
-  test("relocation plan continues numbering after existing files (A3/W2/F19)") {
+  private def seed(): Unit =
     JdbcWorkQueue.seed(Seq(
       (1L, "http://findingaids.example/collections/MC001/c01", " "),
       (2L, "http://findingaids.example/collections/MC001/c02", " "),
       (3L, "http://findingaids.example/collections/MC001/c03", "done"))
       .toDF("id", "dir", "Note"), url, "ImageDirs")
-    val files = Seq(
-      ("MC001/c01", "/in/MC001/c01/b.jp2", "b.jp2"),
-      ("MC001/c01", "/in/MC001/c01/a.jp2", "a.jp2"),
-      ("MC001/c01", "/in/MC001/c01/x.tif", "x.tif"),   // wrong ext → excluded
-      ("MC001/c02", "/in/MC001/c02/p.jp2", "p.jp2"),
-      ("MC001/c03", "/in/MC001/c03/q.jp2", "q.jp2"))   // claimed row → excluded
-      .toDF("dir", "path", "name")
-    val target = Seq(
-      ("MC001/c01", "00000001.jp2"),
-      ("MC001/c01", "00000002.jp2"),
-      ("MC001/c01", "00000009.tif")) // wrong ext → not counted
-      .toDF("dir", "name")
 
+  private def files = Seq(
+    ("MC001/c01", "/in/MC001/c01/b.jp2", "b.jp2"),
+    ("MC001/c01", "/in/MC001/c01/a.jp2", "a.jp2"),
+    ("MC001/c01", "/in/MC001/c01/x.tif", "x.tif"),   // wrong ext → excluded
+    ("MC001/c02", "/in/MC001/c02/p.jp2", "p.jp2"),
+    ("MC001/c03", "/in/MC001/c03/q.jp2", "q.jp2"))   // claimed row → excluded
+    .toDF("dir", "path", "name")
+
+  private def target = Seq(
+    ("MC001/c01", "00000001.jp2"),
+    ("MC001/c01", "00000002.jp2"),
+    ("MC001/c01", "00000009.tif")) // wrong ext → not counted
+    .toDF("dir", "name")
+
+  test("relocation plan continues numbering after existing files (A3/W2/F19)") {
+    seed()
     val plan = RelocatePipeline.run(spark, url, "ImageDirs", files, target,
         ".jp2", tmpDir("relocate"))
       .orderBy("dir", "seq").collect()
@@ -41,5 +45,13 @@ class RelocateSpec extends SparkSpec {
       ("MC001/c01", "/in/MC001/c01/b.jp2", "MC001/c01/00000004.jp2", 4L),
       // c02 empty target → starts at 1; c03 claimed → absent entirely
       ("MC001/c02", "/in/MC001/c02/p.jp2", "MC001/c02/00000001.jp2", 1L)))
+  }
+
+  test("every relocate checkpoint reads back with its inferred schema") {
+    seed()
+    val root = tmpDir("relocate_schema")
+    RelocatePipeline.run(spark, url, "ImageDirs", files, target, ".jp2", root)
+    assert(assertCheckpointSchemas(root) === Seq("00_strip", "01_collect",
+      "02_renumber", "03_plan_moves"))
   }
 }
